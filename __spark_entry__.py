@@ -628,10 +628,10 @@ def _r_flagship_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     images, zones, _ = _corpus(spark)
     tiles = decode_tiles(images, tile_rows=8)
-    # exact_sums: decimal-routed partial sums are order-independent, so the
-    # result is reproducible across partitionings AND matches the DuckDB
-    # oracle value-exactly (CLAUDE.md determinism recipe)
-    return zonal_stats(tiles, zones, res=6, exact_sums=True).select(
+    # zonal_stats routes partial sums through DECIMAL, which is
+    # order-independent, so the result is reproducible across partitionings
+    # AND matches the DuckDB oracle value-exactly (CLAUDE.md determinism recipe)
+    return zonal_stats(tiles, zones, res=6).select(
         "zone_id", "n_px",
         F.round("sum_px", 4).alias("sum_px"),
         "min_px", "max_px",
@@ -699,8 +699,7 @@ def _r_zonal_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     images, zones, _ = _corpus(spark)
     slope_tiles = focal_products(decode_tiles(images, tile_rows=8),
                                  products=("slope",))
-    out = zonal_stats(slope_tiles, zones, res=6, value_col="slope",
-                      exact_sums=True)
+    out = zonal_stats(slope_tiles, zones, res=6, value_col="slope")
     return out.select(
         "zone_id", "n_px",
         F.round("sum_px", 4).alias("sum_px"),

@@ -132,7 +132,7 @@ def main(argv: list[str]) -> int:
         return 2
     inp, pairs = args[0], list(zip(args[1::2], args[2::2]))
     products = tuple(func for _, func in pairs)
-    from .operators.focal import ALL_PRODUCTS, decode_focal_arrow as decode_focal
+    from .operators.focal import ALL_PRODUCTS, decode_focal_arrow
 
     resample = opts.get("resample")
     warp = opts.get("warp")
@@ -533,8 +533,8 @@ def main(argv: list[str]) -> int:
         products = tuple(f for _, f in pairs)
         if not pairs:
             return 0
-    fused = decode_focal(images, tile_rows=tile_rows, products=products,
-                         partitions=spark.sparkContext.defaultParallelism * 2)
+    fused = decode_focal_arrow(images, tile_rows=tile_rows, products=products,
+                               partitions=spark.sparkContext.defaultParallelism * 2)
     keep = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
             "y0", "crs", "caption"]
     fused = fused.cache()

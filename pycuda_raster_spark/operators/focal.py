@@ -10,6 +10,10 @@ All three products are computed in ONE pass sharing dzdx/dzdy (the
 reference's one-input-pass -> many-outputs fan-out, [ref?: scheduler.py
 (output, func) pairs]) — at 10^12-image scale re-reading the corpus per
 product would triple the dominant I/O cost.
+
+Every stencil runs through one body (``_stencil_tiles``) driven by one
+kernel table (``_KERNELS``); the fused decode stage
+(``decode_focal_arrow``) runs entries of the same table on whole grids.
 """
 
 from __future__ import annotations
@@ -20,374 +24,130 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.focal_kernels import horn_products
+from ..functions.focal_kernels import (
+    NODATA,
+    curvature_products,
+    flow_dir,
+    hillshade_md,
+    horn_products,
+    terrain_products,
+)
 
 PRODUCTS = ("slope", "aspect", "hillshade")
+TERRAIN_PRODUCTS = ("tri", "tpi", "roughness")
 
-FOCAL_SCHEMA = (
+# one entry per group of output columns that share a window: the columns
+# and the kernel (grid, cellsize, halo_top, halo_bot) -> one array each
+_KERNELS = {
+    "horn": (PRODUCTS, lambda g, cs, ht, hb: horn_products(
+        g, cs, halo_top=ht, halo_bot=hb)),
+    "terrain": (TERRAIN_PRODUCTS, lambda g, cs, ht, hb: terrain_products(
+        g, halo_top=ht, halo_bot=hb)),
+    "curvature": (("curv_profile", "curv_plan"),
+                  lambda g, cs, ht, hb: curvature_products(
+                      g, cs, halo_top=ht, halo_bot=hb)),
+    "hillshade_md": (("hillshade_md",), lambda g, cs, ht, hb: (hillshade_md(
+        g, cs, halo_top=ht, halo_bot=hb),)),
+    "flow_dir": (("flow_dir",), lambda g, cs, ht, hb: (flow_dir(
+        g, halo_top=ht, halo_bot=hb),)),
+}
+
+_TILE_META = ("image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
+              "y0", "crs", "caption", "psnr")
+_TILE_META_SCHEMA = (
     "image_id string, tile_y int, ty0 int, th int, w int, h int, "
-    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double, "
-    "slope array<float>, aspect array<float>, hillshade array<float>"
+    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double"
 )
 
 
-def focal_products(tiles: DataFrame, products: tuple[str, ...] = PRODUCTS) -> DataFrame:
-    """tiles with halo_top/halo_bot -> per-tile product arrays (flattened
-    row-major, same shape as px). Unrequested products come back null —
-    Catalyst prunes them when the caller never selects them."""
-    want = set(products)
-    unknown = want - set(PRODUCTS)
+def _stencil_tiles(tiles: DataFrame, kernel: str,
+                   products: tuple[str, ...] | None = None,
+                   keep_px: bool = False) -> DataFrame:
+    """tiles with halo_top/halo_bot -> one product array per output column
+    of ``_KERNELS[kernel]`` (flattened row-major, same shape as px).
+    Columns outside ``products`` (default: all) come back null — Catalyst
+    prunes them when the caller never selects them. ``keep_px=True``
+    carries the input band through after the products."""
+    cols, fn = _KERNELS[kernel]
+    want = set(cols if products is None else products)
+    unknown = want - set(cols)
     if unknown:
         raise ValueError(f"unknown products: {sorted(unknown)}")
+
+    def halo(v) -> np.ndarray | None:
+        return None if v is None else np.asarray(v, dtype=np.float32)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"], "tile_y": pdf["tile_y"],
-                "ty0": pdf["ty0"], "th": pdf["th"], "w": pdf["w"],
-                "h": pdf["h"], "cellsize": pdf["cellsize"], "x0": pdf["x0"],
-                "y0": pdf["y0"], "crs": pdf["crs"], "caption": pdf["caption"],
-                "psnr": pdf["psnr"],
-                "slope": [None] * n, "aspect": [None] * n,
-                "hillshade": [None] * n,
-            }
+            out = {c: pdf[c] for c in _TILE_META}
+            out.update({c: [None] * n for c in cols})
+            if keep_px:
+                out["px"] = pdf["px"]
             for i in range(n):
                 th, w = int(pdf["th"].iat[i]), int(pdf["w"].iat[i])
                 grid = np.asarray(pdf["px"].iat[i], dtype=np.float32).reshape(th, w)
-                ht = pdf["halo_top"].iat[i]
-                hb = pdf["halo_bot"].iat[i]
-                s, a, hs = horn_products(
-                    grid,
-                    float(pdf["cellsize"].iat[i]),
-                    halo_top=None if ht is None else np.asarray(ht, dtype=np.float32),
-                    halo_bot=None if hb is None else np.asarray(hb, dtype=np.float32),
-                )
-                if "slope" in want:
-                    out["slope"][i] = s.ravel()
-                if "aspect" in want:
-                    out["aspect"][i] = a.ravel()
-                if "hillshade" in want:
-                    out["hillshade"][i] = hs.ravel()
+                res = fn(grid, float(pdf["cellsize"].iat[i]),
+                         halo(pdf["halo_top"].iat[i]), halo(pdf["halo_bot"].iat[i]))
+                for c, arr in zip(cols, res):
+                    if c in want:
+                        out[c][i] = arr.ravel()
             yield pd.DataFrame(out)
 
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "psnr", "px", "halo_top", "halo_bot"]
-    return tiles.select(*cols).mapInPandas(gen, schema=FOCAL_SCHEMA)
+    schema = ", ".join([_TILE_META_SCHEMA, *(f"{c} array<float>" for c in cols),
+                        *(["px array<float>"] if keep_px else [])])
+    return tiles.select(*_TILE_META, "px", "halo_top", "halo_bot").mapInPandas(
+        gen, schema=schema)
 
 
-TERRAIN_PRODUCTS = ("tri", "tpi", "roughness")
-
-TERRAIN_SCHEMA = (
-    "image_id string, tile_y int, ty0 int, th int, w int, h int, "
-    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double, "
-    "tri array<float>, tpi array<float>, roughness array<float>"
-)
+def focal_products(tiles: DataFrame, products: tuple[str, ...] = PRODUCTS) -> DataFrame:
+    """tiles with halo_top/halo_bot -> Horn slope/aspect/hillshade tiles;
+    unrequested products come back null."""
+    return _stencil_tiles(tiles, "horn", products)
 
 
 def terrain_tiles(tiles: DataFrame,
                   products: tuple[str, ...] = TERRAIN_PRODUCTS) -> DataFrame:
     """tiles with halo_top/halo_bot -> gdaldem TRI/TPI/roughness tiles —
-    same mapInPandas shape (and the same one-pass fan-out rationale) as
-    ``focal_products``; the three share the window so they cost one pass."""
-    from ..functions.focal_kernels import terrain_products
-
-    want = set(products)
-    unknown = want - set(TERRAIN_PRODUCTS)
-    if unknown:
-        raise ValueError(f"unknown products: {sorted(unknown)}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"], "tile_y": pdf["tile_y"],
-                "ty0": pdf["ty0"], "th": pdf["th"], "w": pdf["w"],
-                "h": pdf["h"], "cellsize": pdf["cellsize"], "x0": pdf["x0"],
-                "y0": pdf["y0"], "crs": pdf["crs"], "caption": pdf["caption"],
-                "psnr": pdf["psnr"],
-                "tri": [None] * n, "tpi": [None] * n, "roughness": [None] * n,
-            }
-            for i in range(n):
-                th, w = int(pdf["th"].iat[i]), int(pdf["w"].iat[i])
-                grid = np.asarray(pdf["px"].iat[i], dtype=np.float32).reshape(th, w)
-                ht = pdf["halo_top"].iat[i]
-                hb = pdf["halo_bot"].iat[i]
-                tri, tpi, rough = terrain_products(
-                    grid,
-                    halo_top=None if ht is None else np.asarray(ht, dtype=np.float32),
-                    halo_bot=None if hb is None else np.asarray(hb, dtype=np.float32),
-                )
-                if "tri" in want:
-                    out["tri"][i] = tri.ravel()
-                if "tpi" in want:
-                    out["tpi"][i] = tpi.ravel()
-                if "roughness" in want:
-                    out["roughness"][i] = rough.ravel()
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "psnr", "px", "halo_top", "halo_bot"]
-    return tiles.select(*cols).mapInPandas(gen, schema=TERRAIN_SCHEMA)
-
-
-CURV_SCHEMA = (
-    "image_id string, tile_y int, ty0 int, th int, w int, h int, "
-    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double, "
-    "curv_profile array<float>, curv_plan array<float>"
-)
+    the three share the window so they cost one pass."""
+    return _stencil_tiles(tiles, "terrain", products)
 
 
 def curvature_tiles(tiles: DataFrame) -> DataFrame:
     """tiles with halo_top/halo_bot -> Zevenbergen-Thorne profile + plan
-    curvature tiles (``functions/focal_kernels.py curvature_products``)
-    — same one-pass mapInPandas shape as ``terrain_tiles``; the two
-    curvatures share the window and the D/E/F/G/H terms."""
-    from ..functions.focal_kernels import curvature_products
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"], "tile_y": pdf["tile_y"],
-                "ty0": pdf["ty0"], "th": pdf["th"], "w": pdf["w"],
-                "h": pdf["h"], "cellsize": pdf["cellsize"], "x0": pdf["x0"],
-                "y0": pdf["y0"], "crs": pdf["crs"], "caption": pdf["caption"],
-                "psnr": pdf["psnr"],
-                "curv_profile": [None] * n, "curv_plan": [None] * n,
-            }
-            for i in range(n):
-                th, w = int(pdf["th"].iat[i]), int(pdf["w"].iat[i])
-                grid = np.asarray(
-                    pdf["px"].iat[i], dtype=np.float32).reshape(th, w)
-                ht = pdf["halo_top"].iat[i]
-                hb = pdf["halo_bot"].iat[i]
-                prof, plan = curvature_products(
-                    grid, float(pdf["cellsize"].iat[i]),
-                    halo_top=None if ht is None
-                    else np.asarray(ht, dtype=np.float32),
-                    halo_bot=None if hb is None
-                    else np.asarray(hb, dtype=np.float32),
-                )
-                out["curv_profile"][i] = prof.ravel()
-                out["curv_plan"][i] = plan.ravel()
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "psnr", "px", "halo_top", "halo_bot"]
-    return tiles.select(*cols).mapInPandas(gen, schema=CURV_SCHEMA)
+    curvature tiles (``functions/focal_kernels.py curvature_products``);
+    the two curvatures share the window and the D/E/F/G/H terms."""
+    return _stencil_tiles(tiles, "curvature")
 
 
-HS_MD_SCHEMA = (
-    "image_id string, tile_y int, ty0 int, th int, w int, h int, "
-    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double, "
-    "hillshade_md array<float>"
-)
-
-
-def hillshade_md_tiles(tiles: DataFrame,
-                       altitude_deg: float = 45.0) -> DataFrame:
+def hillshade_md_tiles(tiles: DataFrame) -> DataFrame:
     """tiles with halo_top/halo_bot -> multidirectional hillshade tiles
-    (gdaldem -multidirectional; same mapInPandas shape as terrain_tiles)."""
-    from ..functions.focal_kernels import hillshade_md
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "image_id": pdf["image_id"], "tile_y": pdf["tile_y"],
-                "ty0": pdf["ty0"], "th": pdf["th"], "w": pdf["w"],
-                "h": pdf["h"], "cellsize": pdf["cellsize"], "x0": pdf["x0"],
-                "y0": pdf["y0"], "crs": pdf["crs"], "caption": pdf["caption"],
-                "psnr": pdf["psnr"], "hillshade_md": [None] * len(pdf),
-            }
-            for i in range(len(pdf)):
-                th, w = int(pdf["th"].iat[i]), int(pdf["w"].iat[i])
-                grid = np.asarray(pdf["px"].iat[i], dtype=np.float32).reshape(th, w)
-                ht = pdf["halo_top"].iat[i]
-                hb = pdf["halo_bot"].iat[i]
-                out["hillshade_md"][i] = hillshade_md(
-                    grid, float(pdf["cellsize"].iat[i]),
-                    halo_top=None if ht is None else np.asarray(ht, dtype=np.float32),
-                    halo_bot=None if hb is None else np.asarray(hb, dtype=np.float32),
-                    altitude_deg=altitude_deg,
-                ).ravel()
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "psnr", "px", "halo_top", "halo_bot"]
-    return tiles.select(*cols).mapInPandas(gen, schema=HS_MD_SCHEMA)
-
-
-FLOW_SCHEMA = (
-    "image_id string, tile_y int, ty0 int, th int, w int, h int, "
-    "cellsize double, x0 double, y0 double, crs string, caption string, psnr double, "
-    "flow_dir array<float>"
-)
+    (gdaldem -multidirectional)."""
+    return _stencil_tiles(tiles, "hillshade_md")
 
 
 def flow_dir_tiles(tiles: DataFrame, keep_px: bool = False) -> DataFrame:
     """tiles with halo_top/halo_bot -> D8 flow-direction tiles (ESRI
-    codes; functions/focal_kernels.flow_dir). Same mapInPandas shape as
-    terrain_tiles — the hydrology entry point the gdaldem family lacks.
-    ``keep_px=True`` carries the elevation band through (for consumers
-    that derive per-cell weights, e.g. weighted flow accumulation)."""
-    from ..functions.focal_kernels import flow_dir
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "image_id": pdf["image_id"], "tile_y": pdf["tile_y"],
-                "ty0": pdf["ty0"], "th": pdf["th"], "w": pdf["w"],
-                "h": pdf["h"], "cellsize": pdf["cellsize"], "x0": pdf["x0"],
-                "y0": pdf["y0"], "crs": pdf["crs"], "caption": pdf["caption"],
-                "psnr": pdf["psnr"], "flow_dir": [None] * len(pdf),
-            }
-            if keep_px:
-                out["px"] = pdf["px"]
-            for i in range(len(pdf)):
-                th, w = int(pdf["th"].iat[i]), int(pdf["w"].iat[i])
-                grid = np.asarray(pdf["px"].iat[i], dtype=np.float32).reshape(th, w)
-                ht = pdf["halo_top"].iat[i]
-                hb = pdf["halo_bot"].iat[i]
-                out["flow_dir"][i] = flow_dir(
-                    grid,
-                    halo_top=None if ht is None else np.asarray(ht, dtype=np.float32),
-                    halo_bot=None if hb is None else np.asarray(hb, dtype=np.float32),
-                ).ravel()
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "psnr", "px", "halo_top", "halo_bot"]
-    schema = FLOW_SCHEMA + (", px array<float>" if keep_px else "")
-    return tiles.select(*cols).mapInPandas(gen, schema=schema)
+    codes; functions/focal_kernels.flow_dir) — the hydrology entry point
+    the gdaldem family lacks. ``keep_px=True`` carries the elevation band
+    through (for consumers that derive per-cell weights, e.g. weighted
+    flow accumulation)."""
+    return _stencil_tiles(tiles, "flow_dir", keep_px=keep_px)
 
 
-ALL_PRODUCTS = PRODUCTS + TERRAIN_PRODUCTS + ("flow_dir",)
+# the table entries the fused stage runs on whole grids
+_FUSED_KERNELS = ("horn", "terrain", "flow_dir")
+ALL_PRODUCTS = tuple(c for k in _FUSED_KERNELS for c in _KERNELS[k][0])
 
-_FUSED_COMMON = (
+_FUSED_META = ("image_id", "tile_y", "ty0", "th", "w", "h", "cellsize",
+               "x0", "y0", "crs", "caption", "phash", "psnr")
+_PARTIALS = ("pn", "ps", "pss", "pmin", "pmax")
+FUSED_SCHEMA_BIN = (
     "image_id string, tile_y int, ty0 int, th int, w int, h int, "
     "cellsize double, x0 double, y0 double, crs string, caption string, phash long, psnr double, "
-    "{px_cols}, "
-    "pn bigint, ps double, pss double, pmin double, pmax double"
+    + ", ".join(f"{p} binary" for p in ALL_PRODUCTS)
+    + ", pn bigint, ps double, pss double, pmin double, pmax double"
 )
-FUSED_SCHEMA = _FUSED_COMMON.format(
-    px_cols=", ".join(f"{p} array<float>" for p in ALL_PRODUCTS)
-)
-FUSED_SCHEMA_BIN = _FUSED_COMMON.format(
-    px_cols=", ".join(f"{p} binary" for p in ALL_PRODUCTS)
-)
-
-
-def decode_focal(
-    images: DataFrame,
-    tile_rows: int = 32,
-    products: tuple[str, ...] = PRODUCTS,
-    compute_psnr: bool = False,
-    partitions: int | None = None,
-    as_binary: bool = True,
-) -> DataFrame:
-    """FUSED fast path: decode -> stencil -> tile slice in ONE Python stage.
-
-    The composable pair (decode_tiles -> focal_products) crosses Arrow
-    twice per pixel; at 100 TB that doubles the dominant serialization
-    cost. Here the whole image is decoded once, the Horn kernel runs on
-    the full grid (halo exchange is implicit — the grid is in hand), and
-    tiles of the PRODUCT arrays are emitted, together with the per-tile
-    input-pixel partials (pn/ps/pss/pmin/pmax) that downstream zonal
-    aggregation needs — so zonal stats never touch pixels again.
-    Identical results to the tiled+halo path (tests assert equality).
-
-    ``partitions``: repartition the (small) image rows before the heavy
-    Python stage so decode parallelizes even when the scan produced few
-    splits (a handful of big parquet files otherwise serializes the run).
-
-    ``as_binary`` (default): product tiles are packed little-endian float32
-    BINARY blobs instead of array<float>. Parquet LIST encoding pays
-    per-ELEMENT def/rep levels and JVM array-object churn — measured as a
-    kernel-time storm at high write concurrency (300M list values); packed
-    bytes are flat buffer copies. Decode with numpy.frombuffer('<f4') /
-    the px_f32 helper. Pass False for the analysis-friendly array schema.
-    """
-    from ..functions.focal_kernels import (
-        NODATA as _ND,
-        flow_dir as _flow_dir,
-        terrain_products,
-    )
-    from .decode import _ensure_geo
-
-    want = set(products)
-    unknown = want - set(ALL_PRODUCTS)
-    if unknown:
-        raise ValueError(f"unknown products: {sorted(unknown)}")
-    want_horn = want & set(PRODUCTS)
-    want_terr = want & set(TERRAIN_PRODUCTS)
-    images = _ensure_geo(images)
-    if partitions:
-        images = images.repartition(partitions, "image_id")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "image_id", "tile_y", "ty0", "th", "w", "h", "cellsize",
-                "x0", "y0", "crs", "caption", "phash", "psnr",
-                *ALL_PRODUCTS, "pn", "ps", "pss", "pmin", "pmax")}
-            for row in pdf.itertuples(index=False):
-                w, h = int(row.w), int(row.h)
-                grid = codecs.decode(row.bytes, row.fmt, w, h)
-                p = float("inf")
-                if compute_psnr:
-                    rt = codecs.decode(codecs.encode(grid, row.fmt), row.fmt, w, h)
-                    p = codecs.psnr(grid, rt)
-                prod: dict[str, np.ndarray] = {}
-                if want_horn:
-                    s, a, hs = horn_products(grid, float(row.cellsize))
-                    prod.update(slope=s, aspect=a, hillshade=hs)
-                if want_terr:
-                    tri, tpi, rough = terrain_products(grid)
-                    prod.update(tri=tri, tpi=tpi, roughness=rough)
-                if "flow_dir" in want:
-                    prod["flow_dir"] = _flow_dir(grid)
-                n_tiles = (h + tile_rows - 1) // tile_rows
-                for t in range(n_tiles):
-                    ty0 = t * tile_rows
-                    th = min(tile_rows, h - ty0)
-                    sl = slice(ty0, ty0 + th)
-                    blk = grid[sl]
-                    valid = blk[blk != _ND].astype(np.float64)
-                    out["image_id"].append(row.image_id)
-                    out["tile_y"].append(t)
-                    out["ty0"].append(ty0)
-                    out["th"].append(th)
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["cellsize"].append(float(row.cellsize))
-                    out["x0"].append(float(row.x0))
-                    out["y0"].append(float(row.y0))
-                    out["crs"].append(row.crs)
-                    out["caption"].append(row.caption)
-                    out["phash"].append(int(row.phash))
-                    out["psnr"].append(p)
-                    for pname in ALL_PRODUCTS:
-                        if pname not in want:
-                            out[pname].append(None)
-                        elif as_binary:
-                            out[pname].append(np.ascontiguousarray(
-                                prod[pname][sl], dtype="<f4").tobytes())
-                        else:
-                            out[pname].append(prod[pname][sl].ravel())
-                    out["pn"].append(int(valid.size))
-                    out["ps"].append(float(valid.sum()) if valid.size else 0.0)
-                    out["pss"].append(float((valid * valid).sum()) if valid.size else 0.0)
-                    out["pmin"].append(float(valid.min()) if valid.size else None)
-                    out["pmax"].append(float(valid.max()) if valid.size else None)
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-            "cellsize", "x0", "y0", "crs"]
-    schema = FUSED_SCHEMA_BIN if as_binary else FUSED_SCHEMA
-    return images.select(*cols).mapInPandas(gen, schema=schema)
 
 
 def decode_focal_arrow(
@@ -397,26 +157,43 @@ def decode_focal_arrow(
     compute_psnr: bool = False,
     partitions: int | None = None,
 ) -> DataFrame:
-    """mapInArrow variant of decode_focal (binary payloads only).
+    """FUSED fast path: decode -> stencil -> tile slice in ONE Python stage.
 
-    Skips the pandas detour entirely: input RecordBatches are consumed
-    column-wise, output RecordBatches are assembled from raw NumPy
-    buffers (binary columns = one concatenated data buffer + an offsets
-    vector — no per-value PyBytes objects, no object-dtype arrays). Same
-    rows as decode_focal(as_binary=True); tests assert equality.
+    The composable pair (decode_tiles -> focal_products) crosses Arrow
+    twice per pixel; at 100 TB that doubles the dominant serialization
+    cost. Here the whole image is decoded once, the requested kernels run
+    on the full grid (halo exchange is implicit — the grid is in hand), and
+    tiles of the PRODUCT arrays are emitted, together with the per-tile
+    input-pixel partials (pn/ps/pss/pmin/pmax) that downstream zonal
+    aggregation needs — so zonal stats never touch pixels again.
+    Identical results to the tiled+halo path (tests assert equality).
+
+    ``partitions``: repartition the (small) image rows before the heavy
+    Python stage so decode parallelizes even when the scan produced few
+    splits (a handful of big parquet files otherwise serializes the run).
+
+    Product tiles are packed little-endian float32 BINARY blobs, not
+    array<float>: parquet LIST encoding pays per-ELEMENT def/rep levels and
+    JVM array-object churn — measured as a kernel-time storm at high write
+    concurrency (300M list values); packed bytes are flat buffer copies.
+    Decode with the ``px_f32`` helper. Unrequested products are empty
+    (non-null) blobs.
+
+    mapInArrow: input RecordBatches are consumed column-wise, output
+    RecordBatches are assembled from raw NumPy buffers (binary columns =
+    one concatenated data buffer + an offsets vector — no per-value PyBytes
+    objects, no object-dtype arrays).
     """
     import pyarrow as pa
 
     from ..functions import codecs
-    from ..functions.focal_kernels import flow_dir as _flow_dir, terrain_products
     from .decode import _ensure_geo
 
     want = set(products)
     unknown = want - set(ALL_PRODUCTS)
     if unknown:
         raise ValueError(f"unknown products: {sorted(unknown)}")
-    want_horn = want & set(PRODUCTS)
-    want_terr = want & set(TERRAIN_PRODUCTS)
+    run = [_KERNELS[k] for k in _FUSED_KERNELS if want & set(_KERNELS[k][0])]
     images = _ensure_geo(images)
     if partitions:
         images = images.repartition(partitions, "image_id")
@@ -432,68 +209,44 @@ def decode_focal_arrow(
 
     def gen(batches):
         for rb in batches:
-            n_img = rb.num_rows
             col = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            ids = col["image_id"].to_pylist()
-            caps = col["caption"].to_pylist()
-            crss = col["crs"].to_pylist()
             fmts = col["fmt"].to_pylist()
             ws = col["w"].to_numpy()
             hs = col["h"].to_numpy()
-            phs = col["phash"].to_numpy()
             css = col["cellsize"].to_numpy()
-            x0s = col["x0"].to_numpy()
-            y0s = col["y0"].to_numpy()
             blob = col["bytes"]
+            # one output row per tile: its image's row index and tile number
+            n_tiles = (hs + tile_rows - 1) // tile_rows
+            img = np.repeat(np.arange(rb.num_rows), n_tiles)
+            tile_y = np.arange(img.size) - np.repeat(np.cumsum(n_tiles) - n_tiles, n_tiles)
+            ty0 = tile_y * tile_rows
+            th = np.minimum(tile_rows, hs[img] - ty0)
 
-            o: dict[str, list] = {k: [] for k in (
-                "image_id", "tile_y", "ty0", "th", "w", "h", "cellsize",
-                "x0", "y0", "crs", "caption", "phash", "psnr",
-                "pn", "ps", "pss", "pmin", "pmax")}
+            psnr: list[float] = []
+            part: dict[str, list] = {k: [] for k in _PARTIALS}
             prod_chunks: dict[str, list[bytes]] = {p: [] for p in ALL_PRODUCTS}
             prod_lens: dict[str, list[int]] = {p: [] for p in ALL_PRODUCTS}
 
-            for i in range(n_img):
+            for i in range(rb.num_rows):
                 w, h = int(ws[i]), int(hs[i])
                 grid = codecs.decode(blob[i].as_buffer(), fmts[i], w, h)
                 p = float("inf")
                 if compute_psnr:
                     rt = codecs.decode(codecs.encode(grid, fmts[i]), fmts[i], w, h)
                     p = codecs.psnr(grid, rt)
+                psnr.append(p)
                 prod: dict[str, np.ndarray] = {}
-                if want_horn:
-                    s, a, hsd = horn_products(grid, float(css[i]))
-                    prod.update(slope=s, aspect=a, hillshade=hsd)
-                if want_terr:
-                    tri, tpi, rough = terrain_products(grid)
-                    prod.update(tri=tri, tpi=tpi, roughness=rough)
-                if "flow_dir" in want:
-                    prod["flow_dir"] = _flow_dir(grid)
-                n_tiles = (h + tile_rows - 1) // tile_rows
-                for t in range(n_tiles):
-                    ty0 = t * tile_rows
-                    th = min(tile_rows, h - ty0)
-                    sl = slice(ty0, ty0 + th)
+                for pcols, fn in run:
+                    prod.update(zip(pcols, fn(grid, float(css[i]), None, None)))
+                for t in range(n_tiles[i]):
+                    sl = slice(t * tile_rows, (t + 1) * tile_rows)
                     blk = grid[sl]
-                    valid = blk[blk != -9999.0].astype(np.float64)
-                    o["image_id"].append(ids[i])
-                    o["tile_y"].append(t)
-                    o["ty0"].append(ty0)
-                    o["th"].append(th)
-                    o["w"].append(w)
-                    o["h"].append(h)
-                    o["cellsize"].append(float(css[i]))
-                    o["x0"].append(float(x0s[i]))
-                    o["y0"].append(float(y0s[i]))
-                    o["crs"].append(crss[i])
-                    o["caption"].append(caps[i])
-                    o["phash"].append(int(phs[i]))
-                    o["psnr"].append(p)
-                    o["pn"].append(int(valid.size))
-                    o["ps"].append(float(valid.sum()) if valid.size else 0.0)
-                    o["pss"].append(float((valid * valid).sum()) if valid.size else 0.0)
-                    o["pmin"].append(float(valid.min()) if valid.size else None)
-                    o["pmax"].append(float(valid.max()) if valid.size else None)
+                    valid = blk[blk != NODATA].astype(np.float64)
+                    part["pn"].append(int(valid.size))
+                    part["ps"].append(float(valid.sum()) if valid.size else 0.0)
+                    part["pss"].append(float((valid * valid).sum()) if valid.size else 0.0)
+                    part["pmin"].append(float(valid.min()) if valid.size else None)
+                    part["pmax"].append(float(valid.max()) if valid.size else None)
                     for pname in ALL_PRODUCTS:
                         if pname in want:
                             b = np.ascontiguousarray(prod[pname][sl], dtype="<f4").tobytes()
@@ -503,33 +256,32 @@ def decode_focal_arrow(
                             prod_chunks[pname].append(b"")
                             prod_lens[pname].append(0)
 
-            n = len(o["image_id"])
+            per_tile = pa.array(img)
+            take = lambda c, typ: col[c].take(per_tile).cast(typ)  # noqa: E731
             arrays = [
-                pa.array(o["image_id"], pa.string()),
-                pa.array(np.asarray(o["tile_y"], np.int32)),
-                pa.array(np.asarray(o["ty0"], np.int32)),
-                pa.array(np.asarray(o["th"], np.int32)),
-                pa.array(np.asarray(o["w"], np.int32)),
-                pa.array(np.asarray(o["h"], np.int32)),
-                pa.array(np.asarray(o["cellsize"], np.float64)),
-                pa.array(np.asarray(o["x0"], np.float64)),
-                pa.array(np.asarray(o["y0"], np.float64)),
-                pa.array(o["crs"], pa.string()),
-                pa.array(o["caption"], pa.string()),
-                pa.array(np.asarray(o["phash"], np.int64)),
-                pa.array(np.asarray(o["psnr"], np.float64)),
+                take("image_id", pa.string()),
+                pa.array(tile_y.astype(np.int32)),
+                pa.array(ty0.astype(np.int32)),
+                pa.array(th.astype(np.int32)),
+                take("w", pa.int32()),
+                take("h", pa.int32()),
+                take("cellsize", pa.float64()),
+                take("x0", pa.float64()),
+                take("y0", pa.float64()),
+                take("crs", pa.string()),
+                take("caption", pa.string()),
+                take("phash", pa.int64()),
+                pa.array(np.repeat(np.asarray(psnr, np.float64), n_tiles)),
                 *[bin_array(prod_chunks[p], np.asarray(prod_lens[p], np.int64))
                   for p in ALL_PRODUCTS],
-                pa.array(np.asarray(o["pn"], np.int64)),
-                pa.array(np.asarray(o["ps"], np.float64)),
-                pa.array(np.asarray(o["pss"], np.float64)),
-                pa.array(o["pmin"], pa.float64()),
-                pa.array(o["pmax"], pa.float64()),
+                pa.array(np.asarray(part["pn"], np.int64)),
+                pa.array(np.asarray(part["ps"], np.float64)),
+                pa.array(np.asarray(part["pss"], np.float64)),
+                pa.array(part["pmin"], pa.float64()),
+                pa.array(part["pmax"], pa.float64()),
             ]
-            names = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize",
-                     "x0", "y0", "crs", "caption", "phash", "psnr",
-                     *ALL_PRODUCTS, "pn", "ps", "pss", "pmin", "pmax"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_arrays(
+                arrays, names=[*_FUSED_META, *ALL_PRODUCTS, *_PARTIALS])
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
             "cellsize", "x0", "y0", "crs"]

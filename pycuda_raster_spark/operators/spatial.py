@@ -35,18 +35,6 @@ from ..fixtures import point_in_ring
 from ..functions import cellindex
 
 
-def cell_udf(res: int):
-    """Batched (x, y) -> cell id at ``res``. Kept for API parity/debugging;
-    the hot paths use the JVM Column expression (cellindex_sql.cell_expr),
-    which is bit-identical and needs no Python worker."""
-
-    @F.pandas_udf(T.LongType())
-    def _enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(cellindex.cell(x.to_numpy(), y.to_numpy(), res))
-
-    return _enc
-
-
 def with_cell(df: DataFrame, res: int, x_col: str = "x", y_col: str = "y",
               out_col: str = "cell") -> DataFrame:
     from ..functions.cellindex_sql import cell_expr

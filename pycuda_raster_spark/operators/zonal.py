@@ -59,7 +59,6 @@ def zonal_stats(
     zones: DataFrame,
     res: int | None = None,
     value_col: str = "px",
-    exact_sums: bool = False,
 ) -> DataFrame:
     """Per-zone stats over the pixels of tiles whose centroid falls in the
     zone -> (zone_id, n_px, sum_px, min_px, max_px, mean_px, std_px).
@@ -74,20 +73,19 @@ def zonal_stats(
         "image_id", "tile_y", "ty0", "th", "w", "x0", "y0", "cellsize",
         "pn", "ps", "pss", "pmin", "pmax",
     )
-    return zonal_stats_from_partials(slim, zones, res=zres, exact_sums=exact_sums)
+    return zonal_stats_from_partials(slim, zones, res=zres)
 
 
 def zonal_stats_from_partials(
     partials: DataFrame, zones: DataFrame, res: int | None = None,
-    exact_sums: bool = False,
 ) -> DataFrame:
     """Finalize zonal stats from any DF carrying tile geometry + pixel
-    partials (pn/ps/pss/pmin/pmax) — e.g. ``focal.decode_focal`` output,
-    which makes the whole zonal stage pixel-free.
+    partials (pn/ps/pss/pmin/pmax) — e.g. ``focal.decode_focal_arrow``
+    output, which makes the whole zonal stage pixel-free.
 
-    ``exact_sums``: route the per-tile double partials through
-    DECIMAL(30,10) before the final SUM. Decimal addition is exact and
-    order-independent, so the result is reproducible across partitionings,
+    The per-tile double partials are routed through DECIMAL(30,10) before
+    the final SUM. Decimal addition is exact and order-independent, so the
+    result is reproducible across partitionings,
     retries and engines (a raw double SUM over a shuffled set is not) —
     the property the DuckDB oracle comparison and any 1000-executor
     re-run-stability requirement both need."""
@@ -98,16 +96,11 @@ def zonal_stats_from_partials(
     # partials ride THROUGH the broadcast PIP join — one linear pipeline,
     # the fact side is never shuffled or recomputed
     joined = pip_join_full(cent, zones, res=zres)
-    if exact_sums:
-        dec = lambda c: F.col(c).cast("decimal(30,10)")  # noqa: E731
-        sum_px = F.sum(dec("ps")).cast("double")
-        sum_ss = F.sum(dec("pss")).cast("double")
-    else:
-        sum_px, sum_ss = F.sum("ps"), F.sum("pss")
+    exact_sum = lambda c: F.sum(F.col(c).cast("decimal(30,10)")).cast("double")  # noqa: E731
     agg = joined.groupBy("zone_id").agg(
         F.sum("pn").alias("n_px"),
-        sum_px.alias("sum_px"),
-        sum_ss.alias("__ss"),
+        exact_sum("ps").alias("sum_px"),
+        exact_sum("pss").alias("__ss"),
         F.min("pmin").alias("min_px"),
         F.max("pmax").alias("max_px"),
     )

@@ -19,6 +19,14 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 64
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 64g, as a JVM size string. A
+    fixed 64g maximum on a 15 GB host let G1 grow the heap until the JVM
+    could not map more memory and died mid-run."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(phys_mb // 2, 64 << 10)}m"
+
+
 def get_spark(
     app_name: str = "pycuda_raster_spark",
     cores: int | str | None = None,
@@ -76,8 +84,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         # local mode = one JVM doing scan+shuffle+N concurrent parquet
         # writers; an undersized heap GC-thrashes exactly when parallelism
-        # rises (measured: 32-way write 34.5s @ 24g -> 8.4s @ 64g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # rises (measured: 32-way write 34.5s @ 24g -> 8.4s @ 64g on a
+        # 32-core host), so the default is as large as the machine allows
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Spark 4.1's ChecksumCheckpointFileManager deadlocks state-store

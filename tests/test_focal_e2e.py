@@ -13,7 +13,7 @@ import pytest
 from pycuda_raster_spark.fixtures import CorpusSpec, build_images, grid_for
 from pycuda_raster_spark.functions.focal_kernels import oracle_whole_grid
 from pycuda_raster_spark.operators.decode import decode_tiles
-from pycuda_raster_spark.operators.focal import focal_products
+from pycuda_raster_spark.operators.focal import focal_products, px_f32
 from pycuda_raster_spark.operators.tiling import halo_exchange, strip_halos
 
 SPEC = CorpusSpec(n_images=12, w=48, h=40)  # covers raw/png/q8 + NODATA + dup
@@ -22,6 +22,12 @@ SPEC = CorpusSpec(n_images=12, w=48, h=40)  # covers raw/png/q8 + NODATA + dup
 @pytest.fixture(scope="module")
 def images_df(spark):
     return spark.createDataFrame(build_images(SPEC)).cache()
+
+
+def _f32(v):
+    """Product cell -> float32 array: packed blobs (the fused stage) or
+    array<float> (the stencil stages)."""
+    return px_f32(v) if isinstance(v, (bytes, bytearray)) else np.asarray(v, np.float32)
 
 
 def _collect_products(focal_df):
@@ -39,7 +45,7 @@ def _collect_products(focal_df):
         assert sum(t.th for t in tiles) == h
         out[iid] = {
             p: np.vstack(
-                [np.asarray(t[p], dtype=np.float32).reshape(t.th, w) for t in tiles]
+                [_f32(t[p]).reshape(t.th, w) for t in tiles]
             )
             for p in ("slope", "aspect", "hillshade")
         }
@@ -149,33 +155,27 @@ def test_hillshade_md_tiling_matches_oracle(spark, images_df, tile_rows):
 
 
 def test_fused_terrain_equals_composed(spark, images_df):
-    """decode_focal / decode_focal_arrow with terrain products must be
-    bit-identical to the composable decode_tiles -> terrain_tiles path;
-    unrequested products come back null/empty."""
-    from pycuda_raster_spark.operators.focal import (
-        decode_focal,
-        decode_focal_arrow,
-        terrain_tiles,
-    )
+    """decode_focal_arrow with terrain products must be bit-identical to
+    the composable decode_tiles -> terrain_tiles path; unrequested
+    products come back as empty blobs."""
+    from pycuda_raster_spark.operators.focal import decode_focal_arrow, terrain_tiles
 
     composed = {(r.image_id, r.ty0): r
                 for r in terrain_tiles(decode_tiles(images_df, tile_rows=16)).collect()}
-    fused = decode_focal(images_df, tile_rows=16,
-                         products=("tri", "tpi", "roughness"),
-                         as_binary=False).collect()
+    fused = decode_focal_arrow(images_df, tile_rows=16,
+                               products=("tri", "tpi", "roughness")).collect()
     assert len(fused) == len(composed)
     for r in fused:
         c = composed[(r.image_id, r.ty0)]
-        assert r.slope is None
+        assert bytes(r.slope) == b""
         for p in ("tri", "tpi", "roughness"):
             np.testing.assert_array_equal(
-                np.asarray(r[p], np.float32), np.asarray(c[p], np.float32),
+                px_f32(r[p]), np.asarray(c[p], np.float32),
                 err_msg=f"{r.image_id}/{p}")
     arrow = decode_focal_arrow(images_df, tile_rows=16, products=("tri",)).collect()
     for r in arrow[:6]:
         c = composed[(r.image_id, r.ty0)]
-        np.testing.assert_array_equal(
-            np.frombuffer(bytes(r.tri), "<f4"), np.asarray(c.tri, np.float32))
+        np.testing.assert_array_equal(px_f32(r.tri), np.asarray(c.tri, np.float32))
         assert bytes(r.slope) == b"" and bytes(r.tpi) == b""
 
 
@@ -284,59 +284,84 @@ def test_halo_exchange_equals_fused(spark, images_df):
 
 
 def test_fused_decode_focal_equals_composed(spark, images_df):
-    """The fused fast path (decode_focal) must be bit-identical to the
-    composable decode_tiles -> focal_products path, and its pixel partials
-    must match direct NumPy reductions."""
-    from pycuda_raster_spark.functions.codecs import NODATA, decode
-    from pycuda_raster_spark.operators.focal import decode_focal
+    """The fused fast path (decode_focal_arrow) must be bit-identical to
+    the composable decode_tiles -> focal_products path: every tile's
+    metadata equals decode_tiles', its products equal focal_products', and
+    its five pixel partials equal NumPy reductions of the decoded tile."""
+    from pycuda_raster_spark.functions.codecs import NODATA
+    from pycuda_raster_spark.operators.focal import decode_focal_arrow
 
-    composed = _collect_products(focal_products(decode_tiles(images_df, tile_rows=16)))
-    fused_df = decode_focal(images_df, tile_rows=16, partitions=4, as_binary=False)
+    tiles = decode_tiles(images_df, tile_rows=16)
+    composed = _collect_products(focal_products(tiles))
+    fused_df = decode_focal_arrow(images_df, tile_rows=16, partitions=4)
     fused = _collect_products(fused_df)
     assert set(fused) == set(composed)
     for iid in composed:
         for p in ("slope", "aspect", "hillshade"):
             np.testing.assert_array_equal(fused[iid][p], composed[iid][p])
-    # binary sink mode: identical values, packed little-endian f32
-    bin_rows = decode_focal(images_df, tile_rows=16, partitions=4).collect()
-    for r in bin_rows[:8]:
-        arr = np.frombuffer(bytes(r.slope), dtype="<f4").reshape(r.th, r.w)
-        np.testing.assert_array_equal(
-            arr, composed[r.image_id]["slope"][r.ty0 : r.ty0 + r.th]
-        )
-    # partials spot-check vs decoded pixels
-    rows = {(r.image_id, r.tile_y): r for r in fused_df.collect()}
-    for img in images_df.limit(3).collect():
-        g = decode(bytes(img.bytes), img.fmt, img.w, img.h)
-        for t in range((img.h + 15) // 16):
-            blk = g[t * 16 : t * 16 + 16]
-            v = blk[blk != NODATA].astype(np.float64)
-            r = rows[(img.image_id, t)]
-            assert r.pn == v.size
-            assert abs(r.ps - v.sum()) < 1e-6
 
-
-def test_decode_focal_arrow_equals_pandas(spark, images_df):
-    """The mapInArrow variant (the bench/pipeline hot path since round 2)
-    must emit exactly the same rows as decode_focal(as_binary=True) —
-    every column, bitwise."""
-    from pycuda_raster_spark.operators.focal import decode_focal, decode_focal_arrow
-
-    cols = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
-            "y0", "crs", "caption", "phash", "slope", "aspect", "hillshade",
-            "pn", "ps", "pss", "pmin", "pmax"]
+    meta = ["image_id", "tile_y", "ty0", "th", "w", "h", "cellsize", "x0",
+            "y0", "crs", "caption", "phash"]
     key = lambda r: (r.image_id, r.tile_y)  # noqa: E731
-    a = {key(r): r for r in decode_focal(images_df, tile_rows=16).select(*cols).collect()}
-    b = {key(r): r for r in decode_focal_arrow(images_df, tile_rows=16).select(*cols).collect()}
-    assert set(a) == set(b) and len(a) > 0
-    for k in a:
-        ra, rb = a[k], b[k]
-        for c in cols:
-            va, vb = getattr(ra, c), getattr(rb, c)
-            if isinstance(va, (bytes, bytearray)):
-                assert bytes(va) == bytes(vb), (k, c)
-            else:
-                assert va == vb, (k, c, va, vb)
+    want = {key(r): r for r in tiles.select(*meta, "px").collect()}
+    got = {key(r): r for r in fused_df.collect()}
+    assert set(got) == set(want) and len(got) > 0
+    for k, r in got.items():
+        t = want[k]
+        for c in meta:
+            assert r[c] == t[c], (k, c, r[c], t[c])
+        px = np.asarray(t.px, np.float32)
+        v = px[px != NODATA].astype(np.float64)
+        assert r.pn == v.size, k
+        if v.size:
+            exp = (float(v.sum()), float((v * v).sum()), float(v.min()), float(v.max()))
+        else:
+            exp = (0.0, 0.0, None, None)
+        assert (r.ps, r.pss, r.pmin, r.pmax) == exp, k
+    assert any(r.pn < r.th * r.w for r in got.values()), "corpus must exercise NODATA"
+
+
+def test_stencil_schemas_pinned(spark, images_df):
+    """Names, order and types of every stencil stage's output, for the
+    ``products``/``keep_px`` combinations callers use: downstream selects,
+    parquet sinks and the contract queries all read these columns."""
+    from pycuda_raster_spark.operators.focal import (
+        curvature_tiles,
+        decode_focal_arrow,
+        flow_dir_tiles,
+        hillshade_md_tiles,
+        terrain_tiles,
+    )
+
+    meta = ("image_id:string,tile_y:int,ty0:int,th:int,w:int,h:int,"
+            "cellsize:double,x0:double,y0:double,crs:string,caption:string,")
+    arr = lambda *cs: ",".join(f"{c}:array<float>" for c in cs)  # noqa: E731
+    horn = f"struct<{meta}psnr:double,{arr('slope', 'aspect', 'hillshade')}>"
+    terr = f"struct<{meta}psnr:double,{arr('tri', 'tpi', 'roughness')}>"
+    flow = f"struct<{meta}psnr:double,{arr('flow_dir')}"
+    fused = (f"struct<{meta}phash:bigint,psnr:double,"
+             + ",".join(f"{c}:binary" for c in (
+                 "slope", "aspect", "hillshade", "tri", "tpi", "roughness", "flow_dir"))
+             + ",pn:bigint,ps:double,pss:double,pmin:double,pmax:double>")
+    tiles = decode_tiles(images_df, tile_rows=16)
+    cases = [
+        (focal_products(tiles), horn),
+        (focal_products(tiles, products=("slope",)), horn),
+        (focal_products(tiles, products=()), horn),
+        (terrain_tiles(tiles), terr),
+        (terrain_tiles(tiles, products=("tri",)), terr),
+        (curvature_tiles(tiles),
+         f"struct<{meta}psnr:double,{arr('curv_profile', 'curv_plan')}>"),
+        (hillshade_md_tiles(tiles), f"struct<{meta}psnr:double,{arr('hillshade_md')}>"),
+        (flow_dir_tiles(tiles), flow + ">"),
+        (flow_dir_tiles(tiles, keep_px=True), flow + ",px:array<float>>"),
+        (decode_focal_arrow(images_df), fused),
+        (decode_focal_arrow(images_df, products=()), fused),
+        (decode_focal_arrow(images_df, products=("flow_dir",), compute_psnr=True,
+                            partitions=4), fused),
+    ]
+    for i, (df, want) in enumerate(cases):
+        assert df.schema.simpleString() == want, i
 
 
 def test_caption_passthrough(spark, images_df):
@@ -414,33 +439,21 @@ def test_flow_dir_semantics_inclined_plane():
 
 
 def test_fused_flow_dir_equals_composed(spark, images_df):
-    """decode_focal / decode_focal_arrow with flow_dir must be
-    bit-identical to decode_tiles -> flow_dir_tiles."""
-    from pycuda_raster_spark.operators.focal import (
-        decode_focal,
-        decode_focal_arrow,
-        flow_dir_tiles,
-    )
+    """decode_focal_arrow with flow_dir must be bit-identical to
+    decode_tiles -> flow_dir_tiles."""
+    from pycuda_raster_spark.operators.focal import decode_focal_arrow, flow_dir_tiles
 
     composed = {(r.image_id, r.ty0): r
                 for r in flow_dir_tiles(decode_tiles(images_df, tile_rows=16)).collect()}
-    fused = decode_focal(images_df, tile_rows=16, products=("flow_dir",),
-                         as_binary=False).collect()
+    fused = decode_focal_arrow(images_df, tile_rows=16,
+                               products=("flow_dir",)).collect()
     assert len(fused) == len(composed)
     for r in fused:
         c = composed[(r.image_id, r.ty0)]
-        assert r.slope is None and r.tri is None
+        assert bytes(r.slope) == b"" and bytes(r.tri) == b""
         np.testing.assert_array_equal(
-            np.asarray(r.flow_dir, np.float32),
-            np.asarray(c.flow_dir, np.float32), err_msg=r.image_id)
-    arrow = decode_focal_arrow(images_df, tile_rows=16,
-                               products=("flow_dir",)).collect()
-    for r in arrow[:6]:
-        c = composed[(r.image_id, r.ty0)]
-        np.testing.assert_array_equal(
-            np.frombuffer(bytes(r.flow_dir), "<f4"),
-            np.asarray(c.flow_dir, np.float32))
-        assert bytes(r.slope) == b""
+            px_f32(r.flow_dir), np.asarray(c.flow_dir, np.float32),
+            err_msg=r.image_id)
 
 
 def test_cli_flow_dir_output(spark, images_df, tmp_path):

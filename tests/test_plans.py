@@ -16,7 +16,7 @@ from pycuda_raster_spark.fixtures import (
     build_zones,
     images_df,
 )
-from pycuda_raster_spark.operators.focal import decode_focal
+from pycuda_raster_spark.operators.focal import decode_focal_arrow
 from pycuda_raster_spark.operators.spatial import knn_join, pip_join
 from pycuda_raster_spark.operators.zonal import zonal_stats_from_partials
 
@@ -30,7 +30,7 @@ def plan_of(df) -> str:
 @pytest.fixture(scope="module")
 def tiles_path(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("plans") / "tiles")
-    decode_focal(images_df(spark, SPEC), tile_rows=16).write.parquet(p)
+    decode_focal_arrow(images_df(spark, SPEC), tile_rows=16).write.parquet(p)
     return p
 
 
@@ -60,14 +60,14 @@ def test_zonal_scan_is_pixel_free(spark, tiles_path):
 
 
 def test_fused_pipeline_has_no_shuffle(spark):
-    fused = decode_focal(images_df(spark, SPEC), tile_rows=16)  # no repartition
+    fused = decode_focal_arrow(images_df(spark, SPEC), tile_rows=16)  # no repartition
     plan = plan_of(fused)
     assert "Exchange" not in plan, f"fused path must be shuffle-free:\n{plan}"
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    assert "MapInArrow" in plan
 
 
 def test_fused_pipeline_repartition_is_single_exchange(spark):
-    fused = decode_focal(images_df(spark, SPEC), tile_rows=16, partitions=8)
+    fused = decode_focal_arrow(images_df(spark, SPEC), tile_rows=16, partitions=8)
     plan = plan_of(fused)
     assert plan.count("Exchange") == 1
 

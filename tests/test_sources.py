@@ -386,7 +386,7 @@ def test_geotiff_e2e_slope_and_export(spark, tmp_path):
     """.tif in -> engine slope -> .tif out; engine result == whole-grid
     NumPy oracle bit-for-bit, and the exported product re-reads exactly."""
     from pycuda_raster_spark.functions.focal_kernels import oracle_whole_grid
-    from pycuda_raster_spark.operators.focal import decode_focal, px_f32
+    from pycuda_raster_spark.operators.focal import decode_focal_arrow, px_f32
     from pycuda_raster_spark.sources.geotiff import decode_geotiff, encode_geotiff
     from pycuda_raster_spark.sources.rasters import export_geotiffs
 
@@ -396,7 +396,7 @@ def test_geotiff_e2e_slope_and_export(spark, tmp_path):
     (tmp_path / "in/d.tif").write_bytes(
         encode_geotiff(g, x0=5.0, y0=7.0, cellsize=2.0, crs="EPSG:4326"))
     images = read_raster_files(spark, str(tmp_path / "in"))
-    tiles = decode_focal(images, tile_rows=16).cache()
+    tiles = decode_focal_arrow(images, tile_rows=16).cache()
     got = np.vstack([
         px_f32(r.slope).reshape(r.th, r.w)
         for r in sorted(tiles.collect(), key=lambda r: r.ty0)
